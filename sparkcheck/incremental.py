@@ -85,7 +85,7 @@ from .checkpoint import config_id
 from .planner import CompiledItem, compile_suite
 from .results import (format_map_output, mostly_success,
                       normalize_result_format)
-from .runner import UNEXPECTED_LIST_LIMIT, ValidationRun
+from .runner import ValidationRun, _between_evr, _map_evr, score_row
 from .types import (ExpectationSuite, ExpectationSuiteValidationResult,
                     ExpectationValidationResult, build_statistics)
 
@@ -699,13 +699,7 @@ class IncrementalCheckpoint:
 
     def _verdicts(self, merged_domains: dict,
                   deltas: list[dict]) -> ExpectationSuiteValidationResult:
-        # a detached ValidationRun shim: the fused-EVR methods used below
-        # (_map_evr / _between_evr / _agg_custom_evr / _drift_evr on explicit
-        # partition_objects) are row-arithmetic only — no DataFrame touched
-        vr = ValidationRun.__new__(ValidationRun)
-        vr.rf = normalize_result_format(self.result_format)
-        vr.rf.setdefault("unexpected_list_limit", UNEXPECTED_LIST_LIMIT)
-        vr.partition_verdicts = []
+        rf = normalize_result_format(self.result_format)
         results = []
         for item in self._plan.schema_items:
             cid = config_id(item.config.expectation_type, item.kwargs)
@@ -722,12 +716,12 @@ class IncrementalCheckpoint:
             for item in items:
                 strat = self._strategy[id(item.config)]
                 if strat in ("job_counts", "rowcount_vs_other"):
-                    results.append(self._job_verdict(vr, item, strat, deltas))
+                    results.append(self._job_verdict(rf, item, strat, deltas))
                     continue
                 inv = {a: k for k, a in dp.slot_table.keys.items()}
                 row = {a: inv_rows.get(inv[a]) for a in inv
                        if inv[a] in inv_rows}
-                results.append(self._item_verdict(vr, item, strat, row,
+                results.append(self._item_verdict(rf, item, strat, row,
                                                   inv_rows, inv))
         return ExpectationSuiteValidationResult(
             success=all(r.success for r in results),
@@ -738,7 +732,7 @@ class IncrementalCheckpoint:
                       "snapshots_merged": [d["snapshot_id"] for d in deltas],
                       "unsupported": self._unsupported}})
 
-    def _job_verdict(self, vr, item: CompiledItem, strat: str,
+    def _job_verdict(self, rf: dict, item: CompiledItem, strat: str,
                      deltas: list[dict]) -> ExpectationValidationResult:
         cid = config_id(item.config.expectation_type, item.kwargs)
         recs = [d.get("jobs", {}).get(cid) for d in deltas]
@@ -765,17 +759,14 @@ class IncrementalCheckpoint:
         el = sum(r["el"] for r in recs)
         mi = sum(r["mi"] for r in recs)
         ux = sum(r["ux"] for r in recs)
-        return vr._map_evr(item, el, el - mi, ux, [], None)
+        return _map_evr(item, rf, el, el - mi, ux)
 
-    def _item_verdict(self, vr, item: CompiledItem, strat: str, row: dict,
+    def _item_verdict(self, rf: dict, item: CompiledItem, strat: str, row: dict,
                       inv_rows: dict, inv: dict) -> ExpectationValidationResult:
         kw = item.kwargs
-        if strat == "map":
-            element = int(row[item.slots["element"]] or 0)
-            nonnull = int(row[item.slots["nonnull"]] or 0)
-            unexpected = int(row[item.slots["unexpected"]] or 0)
+        if strat in ("map", "row_count", "distinct_set"):
             # samples live with each delta's own validation, not the stats
-            return vr._map_evr(item, element, nonnull, unexpected, [], None)
+            return score_row(item, row, rf)
         if strat == "unique_approx":
             element = int(row[item.slots["element"]] or 0)
             nonnull = int(row[item.slots["nonnull"]] or 0)
@@ -787,7 +778,7 @@ class IncrementalCheckpoint:
             suspect = est_dups > tolerated
             success = (not suspect) or mostly_success(
                 element, nonnull, est_dups, kw.get("mostly", 1.0))
-            result = format_map_output(vr.rf, bool(success), element, nonnull,
+            result = format_map_output(rf, bool(success), element, nonnull,
                                        est_dups if suspect else 0, [])
             result["details"] = {
                 "strategy": "hll_prescreen_incremental",
@@ -820,7 +811,7 @@ class IncrementalCheckpoint:
                 value = inv_rows.get(f"inc::hll::{c}")
             else:  # pragma: no cover
                 raise ValueError(what)
-            return vr._between_evr(item, value)
+            return _between_evr(item, value)
         if strat.startswith("kll:"):
             c = kw["column"]
             k = _kll_k_for(kw)
@@ -832,7 +823,7 @@ class IncrementalCheckpoint:
                              "within the sketch's normalized rank-error "
                              "bound of a full recompute")}
             if strat == "kll:median":
-                evr = vr._between_evr(item, qmap.get(0.5))
+                evr = _between_evr(item, qmap.get(0.5))
                 evr.result.setdefault("details", {}).update(note)
                 return evr
             quantiles = [float(q) for q in item.info["quantiles"]]
@@ -855,7 +846,7 @@ class IncrementalCheckpoint:
             distinct = inv_rows.get(f"inc::hllp::{c}::{lg}")
             nonnull = int(inv_rows.get(f"inc::nncnt::{c}") or 0)
             value = (distinct / nonnull) if nonnull else None
-            evr = vr._between_evr(item, value)
+            evr = _between_evr(item, value)
             evr.result.setdefault("details", {}).update({
                 "strategy": "hll_union_incremental",
                 "approx_distinct": distinct,
@@ -864,8 +855,6 @@ class IncrementalCheckpoint:
                          "estimate / summed nonnull count; distinct "
                          "standard error ≈ 1.04/sqrt(2^lgConfigK)")})
             return evr
-        if strat in ("row_count", "distinct_set"):
-            return vr._agg_custom_evr(item, row)
         if strat == "drift":
             if "values" in item.info:
                 nonnull = float(row[item.slots["nonnull"]] or 0)
@@ -876,8 +865,7 @@ class IncrementalCheckpoint:
                         "categorical drift merge saw values outside the "
                         "expected set; resolving their mass needs per-value "
                         "counts — run a full validation for this check")
-            item.info["dfd"] = None  # guard: merge path must never scan
-            return vr._drift_evr(item, row)
+            return score_row(item, row, rf)
         raise ValueError(strat)  # pragma: no cover
 
 

@@ -134,26 +134,6 @@ def snr_db(ref: np.ndarray | None, test: np.ndarray | None) -> float:
     return 10.0 * np.log10(sig / noise)
 
 
-def make_snr_udf(strict_codecs: bool = False):
-    """pandas UDF (bytes, codec, ref_bytes, ref_codec) -> snr double.
-
-    Arrow-batched: one Python invocation per record batch, numpy inside.
-    """
-
-    @F.pandas_udf(T.DoubleType())
-    def _snr(payload: pd.Series, codec: pd.Series, ref_payload: pd.Series,
-             ref_codec: pd.Series) -> pd.Series:
-        out = np.empty(len(payload), dtype=np.float64)
-        for i in range(len(payload)):
-            out[i] = snr_db(
-                decode_pcm(ref_payload.iloc[i], ref_codec.iloc[i], strict_codecs),
-                decode_pcm(payload.iloc[i], codec.iloc[i], strict_codecs),
-            )
-        return pd.Series(out)
-
-    return _snr
-
-
 _CRBS = "spark.sql.parquet.columnarReaderBatchSize"
 _ARB = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
@@ -409,6 +389,7 @@ def run_snr_item(run, item, dfd: DataFrame, grow: dict):
     cheap passes, so the binary column never enters the fused suite pass.
     Assumes the reference table has unique join keys (the golden twin).
     """
+    from ..runner import _map_evr
     from pyspark import StorageLevel
 
     kw = item.kwargs
@@ -447,7 +428,7 @@ def run_snr_item(run, item, dfd: DataFrame, grow: dict):
                            .limit(run._sample_limit()).collect()]
         finally:
             proj.unpersist()
-        evr = run._map_evr(item, element, nonnull, unexpected, samples)
+        evr = _map_evr(item, run.rf, element, nonnull, unexpected, samples)
         if evr.result:
             evr.result["details"] = {
                 "mean_snr_db": _finite(agg["mean_snr"]), "min_snr_db": min_snr,
@@ -575,7 +556,7 @@ def run_snr_item(run, item, dfd: DataFrame, grow: dict):
                         .select("__k").limit(k_more).collect()]
     finally:
         hj.unpersist()
-    evr = run._map_evr(item, element, nonnull, unexpected, samples)
+    evr = _map_evr(item, run.rf, element, nonnull, unexpected, samples)
     if evr.result:
         evr.result["details"] = {
             "min_snr_db": min_snr, "strategy": "hash_prescreen",
@@ -598,6 +579,7 @@ def run_payload_item(run, item, dfd: DataFrame, grow: dict):
     linearly-scalable integrity fast path (BASELINE.md reports its N→4N
     efficiency); byte-different re-encodings of identical audio need the
     SNR expectation instead."""
+    from ..runner import _map_evr
     from pyspark import StorageLevel
     kw = item.kwargs
     key = kw.get("join_key", "clip_id")
@@ -626,7 +608,7 @@ def run_payload_item(run, item, dfd: DataFrame, grow: dict):
                        .limit(run._sample_limit()).collect()]
     finally:
         hj.unpersist()
-    evr = run._map_evr(item, element, nonnull, unexpected, samples)
+    evr = _map_evr(item, run.rf, element, nonnull, unexpected, samples)
     if evr.result:
         evr.result["details"] = {"strategy": "payload_hash_match",
                                  "hash_column": hash_col}
@@ -637,6 +619,7 @@ def run_header_item(run, item, dfd: DataFrame, grow: dict):
     """Engine hook: expect_audio_header_to_match_metadata — RIFF header
     sample rate must equal the sr_hz metadata column. Header-only parse (no
     PCM decode), single mapInPandas scan, no join."""
+    from ..runner import _map_evr
     kw = item.kwargs
     key = kw.get("join_key", "clip_id")
     bytes_col = kw.get("bytes_column", "bytes")
@@ -677,7 +660,7 @@ def run_header_item(run, item, dfd: DataFrame, grow: dict):
                        .limit(run._sample_limit()).collect()]
     finally:
         proj.unpersist()
-    return run._map_evr(item, element, nonnull, unexpected, samples)
+    return _map_evr(item, run.rf, element, nonnull, unexpected, samples)
 
 
 def _finite(v):

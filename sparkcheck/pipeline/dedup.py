@@ -190,11 +190,6 @@ _HEX_HIGH = ["8", "9", "a", "b", "c", "d", "e", "f"]
 _LONG_MIN = -9223372036854775807 - 1
 
 
-def _hex_bit_chars(bit: int) -> list[str]:
-    """Hex characters whose 4-bit value has `bit` set (lowercase md5 digits)."""
-    return [format(v, "x") for v in range(16) if v & (1 << bit)]
-
-
 def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """16-bit SimHash over word tokens: bit j is the sign of the sum of
     (+1 / -1) votes from the j-th hex nibble's high bit of each token's md5.
@@ -378,12 +373,6 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         expr = expr + F.when(2 * F.col(f"v{j}") >= n,
                              F.lit(1 << j).cast("long")).otherwise(F.lit(0))
     return per_doc.select(F.col(id_col), expr.cast("long").alias("simhash"))
-
-
-def hamming16(a, b):
-    """Hamming distance between two simhash columns (bit_count of xor);
-    works for any integer width (16- or 64-bit)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_bands(sigs: DataFrame, id_col: str, n_bands: int,

@@ -39,19 +39,6 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return hits / F.size(toks)
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append per-doc quality features: n_tokens, n_chars, nonalpha_ratio,
-    stopword_ratio (en), mean_token_len."""
-    t = F.col(text_col)
-    return (df
-            .withColumn("n_tokens", token_count(t))
-            .withColumn("n_chars_calc", F.length(t))
-            .withColumn("nonalpha_ratio", nonalpha_ratio(t))
-            .withColumn("stopword_ratio", stopword_ratio(t, "en"))
-            .withColumn("mean_token_len",
-                        (F.length(t) - F.col("n_tokens") + 1) / F.col("n_tokens")))
-
-
 def _membership(words: list[str]):
     # NB: must stay a ONE-argument lambda — F.filter treats a second
     # parameter as the element index

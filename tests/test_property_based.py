@@ -22,13 +22,14 @@ def _run(spark, data, etype, **kw):
 
 def _expected_map(data, pred, mostly):
     """Brute-force GE map semantics: unexpected counted over non-null only;
-    success = (nonnull - unexpected) >= mostly * nonnull, vacuous on 0."""
+    success = (nonnull - unexpected) / nonnull >= mostly, vacuous on 0
+    (the division form of expectation.py:1581-1603)."""
     nonnull = [v for v in data if v is not None]
     unexpected = [v for v in nonnull if not pred(v)]
     if not nonnull:
         success = True
     else:
-        success = (len(nonnull) - len(unexpected)) >= mostly * len(nonnull)
+        success = (len(nonnull) - len(unexpected)) / len(nonnull) >= mostly
     return {
         "element_count": len(data),
         "missing_count": len(data) - len(nonnull),

@@ -9,6 +9,8 @@ from __future__ import annotations
 import math
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from sparkcheck import ExpectationSuite, validate
 from sparkcheck.runner import read_partition_verdicts
@@ -329,3 +331,144 @@ def test_non_row_local_items_emit_no_partition_verdicts(spark):
     assert hres.results[0].success
     hpv = {v["partition_id"] for v in hres.meta["partition_verdicts"]}
     assert hpv == {"0", "2", "3"}  # bucket 1 holds 'z': refused, not faked
+
+
+def test_sink_mostly_divides_like_mostly_success(spark, tmp_path):
+    """One partition of 25 rows, 18 of them null, not_null with
+    mostly=0.28: (25 - 18) / 25 >= 0.28 holds, so the global, collected and
+    sink verdicts all pass. Testing 7 >= 0.28 * 25 instead fails, because
+    0.28 * 25 rounds to 7.000000000000001."""
+    from pyspark.sql import functions as F
+    df = spark.range(25, numPartitions=1).select(
+        F.lit("p").alias("bucket"),
+        F.when(F.col("id") < 18, None).otherwise(F.col("id")).alias("v"))
+    suite = ExpectationSuite("round").add(
+        "expect_column_values_to_not_be_null", column="v", mostly=0.28)
+    collected = validate(df, suite, per_partition=True, partition_col="bucket")
+    sink_dir = str(tmp_path / "sink")
+    sunk = validate(df, suite, per_partition=True, partition_col="bucket",
+                    partition_verdict_sink=sink_dir)
+    assert collected.results[0].success and sunk.results[0].success
+    [pv] = collected.meta["partition_verdicts"]
+    assert (pv["success"], pv["unexpected_count"], pv["element_count"]) == \
+        (True, 18, 25)
+    [row] = read_partition_verdicts(spark, sink_dir).collect()
+    assert (row["success"], row["unexpected_count"], row["element_count"]) == \
+        (True, 18, 25)
+
+
+def test_z_score_partition_verdicts_apply_mostly(spark, tmp_path):
+    """Bucket b holds 10 of its 20 rows at 1e6 (|z| ~ 1.7 against the
+    global mean and stddev; every other row has |z| ~ 0.57), so with
+    threshold=1 and mostly=0.95 bucket b fails and bucket a passes, in both
+    modes, with element and missing counts present."""
+    from pyspark.sql import functions as F
+    df = spark.range(40, numPartitions=2).select(
+        F.when(F.col("id") < 20, "a").otherwise("b").alias("bucket"),
+        F.when(F.col("id") >= 30, F.lit(1e6))
+        .otherwise(F.col("id").cast("double")).alias("x"))
+    suite = ExpectationSuite("z").add(
+        "expect_column_value_z_scores_to_be_less_than", column="x",
+        threshold=1.0, mostly=0.95)
+    want = {"a": (True, 0, 20, 0), "b": (False, 10, 20, 0)}
+    collected = validate(df, suite, per_partition=True, partition_col="bucket")
+    assert {v["partition_id"]: (v["success"], v["unexpected_count"],
+                                v["element_count"], v["missing_count"])
+            for v in collected.meta["partition_verdicts"]} == want
+    sink_dir = str(tmp_path / "sink")
+    validate(df, suite, per_partition=True, partition_col="bucket",
+             partition_verdict_sink=sink_dir)
+    assert {r["partition_id"]: (r["success"], r["unexpected_count"],
+                                r["element_count"], r["missing_count"])
+            for r in read_partition_verdicts(spark, sink_dir).collect()} == want
+
+
+def test_partition_scoring_error_is_not_dropped(spark, monkeypatch):
+    """A per-partition scoring error lands in that item's exception_info
+    (its siblings are untouched), or raises with catch_exceptions=False."""
+    import sparkcheck.runner as runner
+    real = runner.score_row
+
+    def broken_for_bucket_1(item, row, rf):
+        if (row.get("__pid") == "1" and item.config.expectation_type
+                == "expect_column_mean_to_be_between"):
+            raise RuntimeError("scorer broke")
+        return real(item, row, rf)
+
+    monkeypatch.setattr(runner, "score_row", broken_for_bucket_1)
+    df = _dup_df(spark)
+    suite = (ExpectationSuite("drop")
+             .add("expect_column_values_to_not_be_null", column="v",
+                  mostly=0.5)
+             .add("expect_column_mean_to_be_between", column="x",
+                  min_value=0, max_value=50))
+    res = validate(df, suite, per_partition=True, partition_col="bucket")
+    ok, broken = res.results
+    assert ok.success and not (ok.exception_info or {}).get("raised_exception")
+    assert not broken.success
+    assert broken.exception_info["raised_exception"]
+    assert "scorer broke" in broken.exception_info["exception_message"]
+    kinds = [v["expectation_type"] for v in res.meta["partition_verdicts"]]
+    assert kinds == ["expect_column_values_to_not_be_null"] * 8
+    with pytest.raises(RuntimeError, match="scorer broke"):
+        validate(df, suite, per_partition=True, partition_col="bucket",
+                 catch_exceptions=False)
+
+
+def test_datetime_bound_agg_sink_matches_collected(spark, tmp_path):
+    """Aggregates with datetime bounds are scored by the same Python code in
+    both modes: on executors in sink mode (no driver-side fallback file),
+    on the driver when collected."""
+    import datetime
+    import glob
+    rows = ([("x", datetime.date(2020, 1, d)) for d in range(1, 11)]
+            + [("y", datetime.date(2021, 6, d)) for d in range(1, 11)])
+    df = spark.createDataFrame(rows, "bucket string, d date")
+    suite = (ExpectationSuite("dt")
+             .add("expect_column_min_to_be_between", column="d",
+                  min_value="2020-01-01", max_value="2020-12-31",
+                  parse_strings_as_datetimes=True)
+             .add("expect_column_max_to_be_between", column="d",
+                  min_value="2020-01-05", max_value="2020-12-31",
+                  parse_strings_as_datetimes=True))
+    collected = validate(df, suite, per_partition=True, partition_col="bucket")
+    sink_dir = str(tmp_path / "sink")
+    sunk = validate(df, suite, per_partition=True, partition_col="bucket",
+                    partition_verdict_sink=sink_dir)
+    assert [r.success for r in collected.results] == [True, False]
+    assert [r.success for r in sunk.results] == [True, False]
+    assert not glob.glob(f"{sink_dir}/*-driver.parquet")
+    got = _norm_sink(read_partition_verdicts(spark, sink_dir))
+    assert got == _norm_collected(collected.meta["partition_verdicts"])
+    assert {(k[0], k[1]): v[0] for k, v in got.items()} == {
+        ("x", "expect_column_min_to_be_between"): True,
+        ("y", "expect_column_min_to_be_between"): False,
+        ("x", "expect_column_max_to_be_between"): True,
+        ("y", "expect_column_max_to_be_between"): False}
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(cases=st.lists(
+    st.integers(0, 1000).flatmap(lambda nn: st.tuples(
+        st.just(nn), st.integers(0, nn),
+        st.integers(0, 100).map(lambda k: k / 100))),
+    min_size=1, max_size=100))
+@example(cases=[(25, 18, 0.28)])
+def test_mostly_col_matches_mostly_success(spark, cases):
+    """The sink's Catalyst mostly expression agrees with
+    results.mostly_success on every (nonnull, unexpected, mostly)."""
+    from pyspark.sql import functions as F
+
+    from sparkcheck.results import mostly_success
+    from sparkcheck.runner import _mostly_col
+
+    def n(v):
+        return F.lit(v).cast("long")
+
+    row = spark.range(1).select(*[
+        _mostly_col(n(nn), n(nn), n(ux), mostly).alias(f"c{i}")
+        for i, (nn, ux, mostly) in enumerate(cases)]).first()
+    for i, (nn, ux, mostly) in enumerate(cases):
+        assert row[f"c{i}"] == mostly_success(nn, nn, ux, mostly), \
+            (nn, ux, mostly)
