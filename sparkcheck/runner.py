@@ -9,11 +9,20 @@ Job structure (vs the reference, SURVEY.md §4):
   map_metric_provider.py:2344-2490).
 - pass 2 (optional): dependent conditions (z-score) whose expressions need
   pass-1 values (mean/stddev) — one fused agg for all of them together.
+- violation samples: per item the rows ``filter(cond).limit(k)`` returns,
+  as the reference's partial_unexpected_list (map_metric_provider.py:
+  2372-2415). The fused counts choose the query: an item with more than k
+  unexpected rows keeps that limit query, which stops reading once it has
+  k rows; every item with at most k, which no limit can stop early, shares
+  ONE query per domain (and one for the failing z-score items): matching
+  rows are exploded per item and cut to each item's first k in scan order
+  by a ``row_number`` window.
+- uniqueness: one persisted dup-key intermediate (the (key, partition)
+  counts of duplicated keys) feeds the dup totals, every partition's share
+  and the top duplicated values (groupBy instead of the reference's
+  whole-table window — column_values_unique.py:83-87).
 - extra jobs only where semantics require them: window conditions
-  (increasing/decreasing), uniqueness dup-groups (groupBy instead of the
-  reference's whole-table window — column_values_unique.py:83-87), referential
-  anti-joins, audio-invariant joins, and violation samples for failed
-  expectations (filter + limit, like map_metric_provider.py:2372-2415).
+  (increasing/decreasing), referential anti-joins, audio-invariant joins.
 
 Verdicts: one scorer, ``score_row(item, row, rf)``, turns a rollup row into
 an EVR. The global row and every partition row go through it. It returns
@@ -43,6 +52,7 @@ import datetime as _dt
 import functools
 import json
 import math
+import operator
 import os
 import traceback
 from decimal import Decimal
@@ -50,6 +60,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from .expectations.defs import get_spec
 from .metrics import conditions as C
@@ -147,6 +158,13 @@ def _map_counts(item: CompiledItem, row: dict) -> tuple[int, int, int]:
     return (int(row[item.slots["element"]] or 0),
             int(row[item.slots["nonnull"]] or 0),
             int(row[item.slots["unexpected"]] or 0))
+
+
+def _sample_value(item: CompiledItem, i: int) -> Column:
+    """The value a violation sample of ``item`` records, as ``__v{i}``."""
+    spec = item.spec
+    return (spec.sample_value(item.kwargs) if spec.sample_value
+            else F.col(item.kwargs["column"])).alias(f"__v{i}")
 
 
 def _map_evr(item: CompiledItem, rf: dict, element: int, nonnull: int,
@@ -405,6 +423,22 @@ def _sink_row(pid: str, item: CompiledItem,
             json.dumps(item.kwargs, sort_keys=True, default=str))
 
 
+def _rollup(df: DataFrame, aggs: list[Column]) -> DataFrame:
+    """``df.rollup("__pid").agg(aggs)`` plus ``__g``, the grouping flag of
+    __pid: 1 on the global row, 0 on partition rows. ``__pid IS NULL``
+    cannot tell them apart: a null partition value has a row of its own."""
+    return df.rollup("__pid").agg(*aggs, F.grouping("__pid").alias("__g"))
+
+
+def _collect_rollup(df: DataFrame,
+                    aggs: list[Column]) -> tuple[dict | None, list[dict]]:
+    """The collected rollup's global row (None on empty input) and its
+    partition rows."""
+    rows = [r.asDict() for r in _rollup(df, aggs).collect()]
+    glob = [r for r in rows if r["__g"]]
+    return glob[0] if glob else None, [r for r in rows if not r["__g"]]
+
+
 def _score_partition_rows(items: list[CompiledItem], rows):
     """``mapPartitions`` body of sink mode: score_row over stored rollup
     rows, on the executors."""
@@ -527,22 +561,26 @@ class ValidationRun:
 
     def _sink_rollup(self, df: DataFrame, aggs: list[Column],
                      name: str) -> tuple[dict | None, DataFrame]:
-        """Write ``df.rollup("__pid").agg(aggs)`` to the sink and read back
-        only its global row (a pushed `__pid IS NULL` filter on the tiny
-        parquet). Returns that row (None on empty input) and the stored
-        partition rows."""
+        """Write ``_rollup(df, aggs)`` to the sink and read back only its
+        global row (a pushed `__g = 1` filter on the tiny parquet). Returns
+        that row (None on empty input) and the stored partition rows."""
         path = self._sink_path(name)
-        df.rollup("__pid").agg(*aggs).write.mode("overwrite").parquet(path)
+        _rollup(df, aggs).write.mode("overwrite").parquet(path)
         stored = df.sparkSession.read.parquet(path)
-        g = stored.filter(F.col("__pid").isNull()).collect()
+        g = stored.filter(F.col("__g") == 1).collect()
         return (g[0].asDict() if g else None,
-                stored.filter(F.col("__pid").isNotNull()))
+                stored.filter(F.col("__g") == 0).drop("__g"))
 
-    def _stored_rollup(self, didx: int) -> DataFrame:
-        """The partition rows of a domain's stored fused rollup."""
-        return (self.df.sparkSession.read
-                .parquet(self._sink_path(f"rollup-domain-{didx}"))
-                .filter(F.col("__pid").isNotNull()))
+    def _stored_shares(self, didx: int, shares: DataFrame) -> DataFrame:
+        """The partition rows of a domain's stored fused rollup, left-joined
+        on __pid to ``shares`` (per-partition unexpected counts). The join
+        is null-safe: a null partition value is a partition too."""
+        stored = (self.df.sparkSession.read
+                  .parquet(self._sink_path(f"rollup-domain-{didx}"))
+                  .filter(F.col("__g") == 0))
+        shares = shares.withColumnRenamed("__pid", "__spid")
+        return stored.join(shares, stored["__pid"].eqNullSafe(
+            shares["__spid"]), "left")
 
     def _write_verdicts(self, frames: list[DataFrame], name: str) -> None:
         if frames:
@@ -577,30 +615,28 @@ class ValidationRun:
 
     # ---------------------------------------------------------- fused evrs
 
-    def _fused_evr(self, item: CompiledItem, row: dict,
-                   dfd: DataFrame) -> ExpectationValidationResult:
+    def _fused_evr(self, item: CompiledItem, row: dict, dfd: DataFrame,
+                   samples: dict) -> ExpectationValidationResult:
         """The global verdict of a fused item: score_row on the global row,
-        plus what needs the data — violation samples, or the whole verdict
-        where score_row returns None (and categorical KL with out-of-set
-        values, whose details name them)."""
+        plus what needs the data — violation samples (``samples``, from
+        _sample_pass), or the whole verdict where score_row returns None
+        (and categorical KL with out-of-set values, whose details name
+        them)."""
         evr = (None if _out_of_set_mass(item, row) > 0.5
                else score_row(item, row, self.rf))
         if evr is None:
             return self._data_backed_evr(item, row, dfd)
-        # a BOOLEAN_ONLY result is empty: no counts, no samples
-        if item.spec.kind == "map" and evr.result.get("unexpected_count"):
-            cond = self._nonnull_of(item) & ~item.spec.condition(item.kwargs)
-            samples, index_list = self._collect_samples(dfd, cond, item)
-            return _map_evr(item, self.rf, *_map_counts(item, row),
-                            samples, index_list)
+        if id(item) in samples:
+            return self._sampled_map_evr(item, _map_counts(item, row),
+                                         samples[id(item)])
         return evr
 
     def _run_fused_item(self, item: CompiledItem, grow: dict,
-                        pid_rows: list[dict],
-                        dfd: DataFrame) -> ExpectationValidationResult:
+                        pid_rows: list[dict], dfd: DataFrame,
+                        samples: dict) -> ExpectationValidationResult:
         """Global verdict plus, in collected mode, one verdict per partition
         row; a raise in any of them lands in this item's EVR."""
-        evr = self._fused_evr(item, grow, dfd)
+        evr = self._fused_evr(item, grow, dfd, samples)
         scored = [(p["__pid"], score_row(item, p, _PARTITION_RF))
                   for p in pid_rows]
         for pid, pevr in scored:
@@ -619,42 +655,99 @@ class ValidationRun:
             return _drift_evr(item, row, self._bootstrap_pool(item, row, dfd))
         return self._out_of_set_kl_evr(item, row, dfd)
 
-    def _collect_samples(self, dfd: DataFrame, unexpected_cond: Column,
-                         item: CompiledItem) -> tuple[list, list | None]:
-        """Violation samples, plus — when the result format names
-        `unexpected_index_column_names` — a keyed index entry per sample.
+    def _sample_pass(self, dfd: DataFrame,
+                     failing: list[tuple[CompiledItem, Column, int]]) -> dict:
+        """Violation samples of every ``(item, unexpected_cond,
+        unexpected_count)`` in ``failing``: per item, the rows
+        ``dfd.filter(cond).limit(k)`` returns, i.e. its first k unexpected
+        rows in scan order (the reference's partial_unexpected_list,
+        map_metric_provider.py:2372-2415).
+
+        The fused counts pick the queries. Each item with more than k
+        unexpected rows gets that limit query of its own: Spark's
+        CollectLimit reads input partitions a few at a time and stops once
+        it holds k rows, after the first partition when the violations are
+        dense. An item with at most k unexpected rows cannot stop before the
+        end of the data, so two or more such items share ONE query (a lone
+        one keeps its limit query, which is cheaper than the shared shape):
+        rows matching any of their conditions get their scan-order id
+        (``monotonically_increasing_id``) and are exploded once per item
+        whose condition holds; ``row_number() <= k`` per item (a partial
+        WindowGroupLimit below the shuffle for k up to
+        ``spark.sql.optimizer.windowGroupLimitThreshold``) bounds what moves
+        even if the data changed since the fused pass. Since each of its
+        items matches at most k rows, the shared query shuffles at most
+        items x k rows for any k; the driver orders them by (item, scan id).
+        Each item has its own value column, so strings, numbers and
+        column-pair structs keep their types.
 
         Spark has no stable row index, so the reference's pandas-only
         `unexpected_index_list` (positional indices, expectation.py:
         1541-1553) is re-expressed the way its newer result-format contract
-        does: the caller names business-key column(s) (e.g. clip_id) and
-        each entry is a dict of those key values + the domain column's
-        unexpected value. Same limit/caps as the sample list."""
+        does: the caller names business-key column(s) (e.g. clip_id) in
+        `unexpected_index_column_names` and each entry is a dict of those
+        key values + the domain column's unexpected value.
+
+        Returns {id(item): (samples, index_list or None)}. If a query
+        raises, each item it served maps to the exception instead, which
+        _sampled_map_evr raises into that item's verdict."""
         if self.rf["result_format"] == "BOOLEAN_ONLY":
-            return [], None
-        kw = item.kwargs
-        value = item.spec.sample_value(kw) if item.spec.sample_value else F.col(kw["column"])
-        idx_cols = self.rf.get("unexpected_index_column_names") or None
-        sel = [value.alias("v")]
-        if idx_cols:
-            sel += [F.col(c).alias(f"__idx_{i}") for i, c in enumerate(idx_cols)]
-        rows = (
-            dfd.filter(unexpected_cond)
-            .select(*sel)
-            .limit(self._sample_limit())
-            .collect()
-        )
-        samples = [self._sample_py(r["v"], kw) for r in rows]
-        if not idx_cols:
-            return samples, None
-        domain = kw.get("column")
-        index_list = []
-        for r, s in zip(rows, samples):
-            entry = {c: r[f"__idx_{i}"] for i, c in enumerate(idx_cols)}
-            if domain and domain not in entry:
-                entry[domain] = s
-            index_list.append(entry)
-        return samples, index_list
+            return {}
+        k = self._sample_limit()
+        idx_cols = self.rf.get("unexpected_index_column_names") or []
+        idx = [F.col(c).alias(f"__idx_{j}") for j, c in enumerate(idx_cols)]
+        shared = [(it, cond) for it, cond, n in failing if n <= k]
+        if len(shared) < 2:
+            shared = []
+        queries = [([it], dfd.filter(cond).select(
+                        F.lit(0).alias("__i"), _sample_value(it, 0), *idx)
+                    .limit(k))
+                   for it, cond, n in failing if n > k or not shared]
+        if shared:
+            conds = [cond for _, cond in shared]
+            first_k = Window.partitionBy("__i").orderBy("__mid")
+            queries.append((
+                [it for it, _ in shared],
+                dfd.filter(functools.reduce(operator.or_, conds)).select(
+                    F.monotonically_increasing_id().alias("__mid"),
+                    F.explode(F.array_compact(F.array(
+                        *[F.when(c, F.lit(i)) for i, c in enumerate(conds)])))
+                    .alias("__i"),
+                    *[_sample_value(it, i) for i, (it, _) in enumerate(shared)],
+                    *idx)
+                .withColumn("__rn", F.row_number().over(first_k))
+                .filter(F.col("__rn") <= k)))
+        out = {}
+        for items, query in queries:
+            try:
+                rows = query.collect()
+            except Exception as exc:  # noqa: BLE001 — lands in each served item
+                out.update({id(it): exc for it in items})
+                continue
+            if len(items) > 1:
+                rows.sort(key=lambda r: (r["__i"], r["__mid"]))
+            got = [([], [] if idx_cols else None) for _ in items]
+            for r in rows:
+                kw = items[r["__i"]].kwargs
+                value = self._sample_py(r[f"__v{r['__i']}"], kw)
+                samples, index_list = got[r["__i"]]
+                samples.append(value)
+                if idx_cols:
+                    entry = {c: r[f"__idx_{j}"] for j, c in enumerate(idx_cols)}
+                    if kw.get("column") and kw["column"] not in entry:
+                        entry[kw["column"]] = value
+                    index_list.append(entry)
+            out.update({id(it): g for it, g in zip(items, got)})
+        return out
+
+    def _sampled_map_evr(self, item: CompiledItem,
+                         counts: tuple[int, int, int],
+                         sampled) -> ExpectationValidationResult:
+        """A map verdict with its violation samples; raises the sample
+        query's exception when _sample_pass stored one for the item."""
+        if isinstance(sampled, Exception):
+            raise sampled
+        return _map_evr(item, self.rf, *counts, *sampled)
 
     @staticmethod
     def _sample_py(v, kw: dict):
@@ -904,13 +997,12 @@ class ValidationRun:
             g, pid_u = self._sink_rollup(flagged, [ux_agg],
                                          f"wrollup-domain-{didx}-w{jidx}")
             unexpected = int(g["u"]) if g else 0
-            joined = self._stored_rollup(didx).join(pid_u, "__pid", "left")
+            joined = self._stored_shares(didx, pid_u)
             self._write_verdicts([self._map_verdict_frame(item, joined, F.col("u"))],
                                  f"verdicts-domain-{didx}-w{jidx}")
         elif per_part:
-            rows = flagged.rollup("__pid").agg(ux_agg).collect()
-            g = [r for r in rows if r["__pid"] is None]
-            unexpected = int(g[0]["u"]) if g else 0
+            g, rows = _collect_rollup(flagged, [ux_agg])
+            unexpected = int(g["u"]) if g else 0
             self._record_map_verdicts(item, pid_rows or [],
                                       {r["__pid"]: r["u"] for r in rows})
         else:
@@ -941,12 +1033,11 @@ class ValidationRun:
         per_partition (r5): the exact path also emits one verdict row per
         partition counting that partition's rows that participate in a
         GLOBAL duplicate group (the counts sum to the global
-        unexpected_count). Derived from a (key, partition) pre-aggregation,
-        so the extra cost is one shuffle of distinct-key-sized data; in sink
-        mode the rows are joined to the stored rollup and written by
-        executors — nothing per-partition reaches the driver. The
-        approx/clean-prescreen strategies skip per-partition verdicts: an
-        HLL sketch cannot attribute cross-partition duplicates.
+        unexpected_count), read from the same dup-key intermediate as the
+        global counts; in sink mode the rows are joined to the stored rollup
+        and written by executors — nothing per-partition reaches the
+        driver. The approx/clean-prescreen strategies skip per-partition
+        verdicts: an HLL sketch cannot attribute cross-partition duplicates.
         """
         kw = item.kwargs
         compound = item.spec.extra.get("compound", False)
@@ -994,32 +1085,62 @@ class ValidationRun:
             {"column_list": cols,
              "ignore_row_if": kw.get("ignore_row_if", "all_values_are_missing")}) \
             if compound else F.col(cols[0]).isNotNull()
-        g1 = None
-        if self.per_partition:
-            # (key, partition) pre-agg: the global dup groups AND each
-            # partition's share of them derive from this one distinct-key-
-            # sized intermediate (map-side partial agg does the heavy lift)
-            g1 = (dfd.filter(nn).withColumn("__pid", self._pid_expr())
-                  .groupBy(*cols, "__pid")
-                  .agg(F.count(F.lit(1)).alias("__c")))
-            vc = g1.groupBy(*cols).agg(F.sum("__c").alias("__cnt"))
+        # d: the (key[, partition]) counts of every duplicated key, persisted
+        # so the dup totals, each partition's share and the top duplicated
+        # values all come from it. __cnt is the key's total, __first flags
+        # one row per key. Globally a key is one row, so a hash aggregate
+        # and a filter give d; per partition a window over the key sums its
+        # partition counts. Window partitions group null keys together, as
+        # groupBy does, so partially-null compound keys duplicate too.
+        per_part = self.per_partition
+        sink = per_part and self.partition_verdict_sink is not None
+        rows = dfd.filter(nn)
+        if per_part:
+            key = Window.partitionBy(*cols)
+            d = (rows.withColumn("__pid", self._pid_expr())
+                 .groupBy(*cols, "__pid").agg(F.count(F.lit(1)).alias("__c"))
+                 .select("*", F.sum("__c").over(key).alias("__cnt"),
+                         (F.row_number().over(key.orderBy("__pid")) == 1)
+                         .cast("long").alias("__first"))
+                 .filter(F.col("__cnt") > 1))
         else:
-            vc = dfd.filter(nn).groupBy(*cols).agg(
-                F.count(F.lit(1)).alias("__cnt"))
-        dup = vc.filter(F.col("__cnt") > 1)
-        stats = dup.agg(
-            F.coalesce(F.sum("__cnt"), F.lit(0)).alias("dup_rows"),
-            F.count(F.lit(1)).alias("dup_groups")).first()
-        unexpected = int(stats["dup_rows"])
-        samples: list = []
-        if unexpected and self.rf["result_format"] != "BOOLEAN_ONLY":
-            k = self._sample_limit()
-            top = dup.orderBy(F.desc("__cnt"), *cols).limit(k).collect()
-            for r in top:
-                val = r[cols[0]] if not compound else {c: r[c] for c in cols}
-                samples.extend([val] * min(int(r["__cnt"]), k - len(samples)))
-                if len(samples) >= k:
-                    break
+            d = (rows.groupBy(*cols).agg(F.count(F.lit(1)).alias("__c"))
+                 .filter(F.col("__c") > 1)
+                 .select("*", F.col("__c").alias("__cnt"),
+                         F.lit(1).cast("long").alias("__first")))
+        d = d.persist()
+        aggs = [F.coalesce(F.sum("__c"), F.lit(0)).alias("dup_rows"),
+                F.coalesce(F.sum("__first"), F.lit(0)).alias("dup_groups")]
+        try:
+            if per_part and not sink:
+                stats, pid_dup = _collect_rollup(d, aggs)
+                shares = {r["__pid"]: r["dup_rows"] for r in pid_dup}
+            else:
+                stats = d.agg(*aggs).first()
+            stats = stats or {"dup_rows": 0, "dup_groups": 0}
+            unexpected = int(stats["dup_rows"])
+            samples: list = []
+            if unexpected and self.rf["result_format"] != "BOOLEAN_ONLY":
+                k = self._sample_limit()
+                top = (d.filter(F.col("__first") == 1)
+                       .orderBy(F.desc("__cnt"), *cols).limit(k).collect())
+                for r in top:
+                    val = r[cols[0]] if not compound else {c: r[c] for c in cols}
+                    samples.extend([val] * min(int(r["__cnt"]), k - len(samples)))
+                    if len(samples) >= k:
+                        break
+            if sink:
+                # join executor-side to the stored rollup's per-partition
+                # element/nonnull and write verdict rows distributed
+                joined = self._stored_shares(didx, d.groupBy("__pid").agg(
+                    F.sum("__c").alias("__dup")))
+                self._write_verdicts(
+                    [self._map_verdict_frame(item, joined, F.col("__dup"))],
+                    f"verdicts-domain-{didx}-u{jidx}")
+        finally:
+            d.unpersist()
+        if per_part and not sink:
+            self._record_map_verdicts(item, pid_rows or [], shares)
         evr = _map_evr(item, self.rf, element, nonnull, unexpected, samples)
         if evr.result:
             evr.result["details"] = {
@@ -1027,37 +1148,7 @@ class ValidationRun:
                              if self.unique_strategy == "auto" else "exact_groupby"),
                 "approx_distinct": approx,
                 "duplicate_groups": int(stats["dup_groups"])}
-        if g1 is not None:
-            self._emit_unique_partition_verdicts(item, g1, dup, cols,
-                                                 pid_rows, didx, jidx)
         return evr
-
-    def _emit_unique_partition_verdicts(self, item: CompiledItem, g1, dup,
-                                        cols: list[str],
-                                        pid_rows: list[dict] | None,
-                                        didx: int, jidx: int) -> None:
-        """Per-partition rows participating in a GLOBAL duplicate group:
-        g1 = (key, partition, count), dup = the duplicated keys. Null-safe
-        key equality — partially-null compound keys DO group (and therefore
-        duplicate) in the reference semantics."""
-        g = g1.alias("g")
-        d = dup.select(*cols).alias("d")
-        cond = functools.reduce(lambda a, b: a & b,
-                                [F.col(f"g.{c}").eqNullSafe(F.col(f"d.{c}"))
-                                 for c in cols])
-        pid_dup = (g.join(d, cond, "left_semi")
-                   .groupBy("__pid").agg(F.sum("__c").alias("__dup")))
-        if self.partition_verdict_sink is not None:
-            # join executor-side to the stored rollup's per-partition
-            # element/nonnull and write verdict rows distributed
-            joined = self._stored_rollup(didx).join(pid_dup, "__pid", "left")
-            self._write_verdicts(
-                [self._map_verdict_frame(item, joined, F.col("__dup"))],
-                f"verdicts-domain-{didx}-u{jidx}")
-            return
-        self._record_map_verdicts(item, pid_rows or [], {
-            r["__pid"]: r["__dup"]
-            for r in pid_dup.collect()})  # bounded by #partitions
 
     def _run_most_common(self, item: CompiledItem, dfd: DataFrame, grow: dict) -> ExpectationValidationResult:
         """Most-common value(s) with the tie collect BOUNDED (`max_ties`,
@@ -1185,8 +1276,11 @@ class ValidationRun:
 
     def _run_dependent_items(self, items: list[CompiledItem], dfd: DataFrame,
                              grow: dict, pid_rows: list[dict],
-                             didx: int = 0) -> list[tuple[CompiledItem, ExpectationValidationResult]]:
-        """Z-score conditions: second fused pass using pass-1 mean/stddev."""
+                             didx: int = 0) -> list[tuple[CompiledItem, Any]]:
+        """Z-score conditions: second fused pass using pass-1 mean/stddev,
+        then one sample pass for the failing items. Returns (item, a
+        callable building its EVR), so a sample-query error lands only in
+        the items that query served."""
         exprs = []
         conds: dict[str, Column] = {}
         for i, item in enumerate(items):
@@ -1206,32 +1300,30 @@ class ValidationRun:
                 dfd.withColumn("__pid", self._pid_expr()), exprs,
                 f"zrollup-domain-{didx}")
             zrow = zg or empty
-            joined = self._stored_rollup(didx).join(pid_z, "__pid", "left")
+            joined = self._stored_shares(didx, pid_z)
             self._write_verdicts(
                 [self._map_verdict_frame(item, joined, F.col(f"z{i}"))
                  for i, item in enumerate(items)],
                 f"verdicts-domain-{didx}-z")
         elif self.per_partition:
-            rows = dfd.withColumn("__pid", self._pid_expr()).rollup("__pid").agg(*exprs).collect()
-            global_rows = [r for r in rows if r["__pid"] is None]
-            zrow = global_rows[0].asDict() if global_rows else empty
+            zg, rows = _collect_rollup(
+                dfd.withColumn("__pid", self._pid_expr()), exprs)
+            zrow = zg or empty
             for i, item in enumerate(items):
                 self._record_map_verdicts(
                     item, pid_rows, {r["__pid"]: r[f"z{i}"] for r in rows})
         else:
             zrow = dfd.agg(*exprs).first().asDict() if exprs else {}
-        out = []
-        for i, item in enumerate(items):
-            element = int(grow[item.slots["element"]] or 0)
-            nonnull = int(grow[item.slots["nonnull"]] or 0)
-            unexpected = int(zrow.get(f"z{i}", 0) or 0)
-            samples: list = []
-            index_list = None
-            if unexpected and self.rf["result_format"] != "BOOLEAN_ONLY":
-                samples, index_list = self._collect_samples(dfd, conds[f"z{i}"], item)
-            evr = _map_evr(item, self.rf, element, nonnull, unexpected, samples, index_list)
-            out.append((item, evr))
-        return out
+        counts = {id(item): (int(grow[item.slots["element"]] or 0),
+                             int(grow[item.slots["nonnull"]] or 0),
+                             int(zrow.get(f"z{i}", 0) or 0))
+                  for i, item in enumerate(items)}
+        samples = self._sample_pass(dfd, [
+            (item, conds[f"z{i}"], counts[id(item)][2])
+            for i, item in enumerate(items) if counts[id(item)][2]])
+        return [(item, functools.partial(
+            self._sampled_map_evr, item, counts[id(item)],
+            samples.get(id(item), ([], None)))) for item in items]
 
     # -------------------------------------------------------------- schema
 
@@ -1548,12 +1640,9 @@ class ValidationRun:
                         # distributed; nothing wide is collected (r4 #6)
                         grow = self._fused_pass_to_sink(dp, dfd, didx)
                     elif self.per_partition:
-                        rows = [r.asDict() for r in
-                                dfd.withColumn("__pid", self._pid_expr())
-                                .rollup("__pid").agg(*agg_list).collect()]
-                        global_rows = [r for r in rows if r["__pid"] is None]
-                        grow = global_rows[0] if global_rows else {a: None for a in dp.slot_table.exprs}
-                        pid_rows = [r for r in rows if r["__pid"] is not None]
+                        g, pid_rows = _collect_rollup(
+                            dfd.withColumn("__pid", self._pid_expr()), agg_list)
+                        grow = g or {a: None for a in dp.slot_table.exprs}
                     else:
                         first = dfd.agg(*agg_list).first()
                         grow = first.asDict() if first is not None else {a: None for a in dp.slot_table.exprs}
@@ -1571,15 +1660,20 @@ class ValidationRun:
                             })
                     continue
 
+            samples = self._sample_pass(dfd, [
+                (it, self._nonnull_of(it) & ~it.spec.condition(it.kwargs),
+                 _map_counts(it, grow)[2])
+                for it in dp.fused_items
+                if it.spec.kind == "map" and _map_counts(it, grow)[2]])
             for item in dp.fused_items:
                 record(item.config, lambda it=item: self._run_fused_item(
-                    it, grow, pid_rows, dfd))
+                    it, grow, pid_rows, dfd, samples))
 
             if dp.dependent_items:
                 try:
-                    for item, evr in self._run_dependent_items(
+                    for item, evr_fn in self._run_dependent_items(
                             dp.dependent_items, dfd, grow, pid_rows, didx):
-                        evrs[id(item.config)] = evr
+                        record(item.config, evr_fn)
                 except Exception as e:  # noqa: BLE001
                     if not self.catch_exceptions:
                         raise

@@ -557,3 +557,112 @@ def test_validator_head(spark):
     rows = v.head(3)
     assert [r["v"] for r in rows] == [0, 1, 2]
     assert len(v.head(fetch_all=True)) == 10
+
+
+# ----------------------------------------------- violation samples, one pass
+
+@pytest.fixture(scope="module")
+def sample_df(spark, tmp_path_factory):
+    """3000 rows shuffled into 4 parquet files, so scan order is not id
+    order. Four map checks fail with three value types: a string regex, an
+    int between, a column pair (struct sample) and an in_set with only 2
+    unexpected rows (fewer than partial_unexpected_count)."""
+    from pyspark.sql import functions as F
+    path = str(tmp_path_factory.mktemp("samples") / "t")
+    (spark.range(0, 3000, numPartitions=4).select(
+        F.col("id"),
+        F.concat(F.when(F.col("id") % 7 == 3, F.lit("bad-"))
+                 .otherwise(F.lit("ok-")), F.col("id").cast("string")).alias("s"),
+        F.when(F.col("id") % 11 == 0, F.lit(99999))
+        .otherwise(F.col("id") % 100).cast("int").alias("n"),
+        (F.col("id") % 13).alias("a"), (F.col("id") % 5).alias("b"),
+        F.when(F.col("id").isin(17, 2900), "x").otherwise("y").alias("c"))
+     .orderBy(F.rand(7)).repartition(4).write.parquet(path))
+    return spark.read.parquet(path)
+
+
+def _sample_suite():
+    return (ExpectationSuite("samples")
+            .add("expect_column_values_to_match_regex", column="s",
+                 regex="^ok-")
+            .add("expect_column_values_to_be_between", column="n",
+                 min_value=0, max_value=99)
+            .add("expect_column_pair_values_A_to_be_greater_than_B",
+                 column_A="a", column_B="b")
+            .add("expect_column_values_to_be_in_set", column="c",
+                 value_set=["y"])
+            .add("expect_column_values_to_not_be_null", column="s")
+            .add("expect_column_mean_to_be_between", column="n",
+                 min_value=0, max_value=10**9))
+
+
+def _first_k(df, k):
+    """Per failing item of _sample_suite, df.filter(cond).limit(k): the
+    sample list and the keyed index entries (unexpected_index_column_names
+    = ["id"])."""
+    from pyspark.sql import functions as F
+    checks = [(~F.col("s").rlike("^ok-"), "s"),
+              (~F.col("n").between(0, 99), "n"),
+              (~(F.col("a") > F.col("b")), None),
+              (~F.col("c").isin("y"), "c")]
+    out = []
+    for cond, col in checks:
+        rows = df.filter(cond).limit(k).collect()
+        vals = [r[col] if col else [r["a"], r["b"]] for r in rows]
+        index = [{"id": r["id"], **({col: r[col]} if col else {})}
+                 for r in rows]
+        out.append((vals, index))
+    return out
+
+
+def test_sample_pass_matches_filter_limit(sample_df):
+    """Every failing item's samples are exactly the rows
+    filter(cond).limit(k) returns, in the same order: BASIC (k=20), and
+    COMPLETE with keyed index entries at unexpected_list_limit 7, 500 and
+    1000. The failing items have 429, 273, 695 and 2 unexpected rows, so
+    the items with at most k share one query at k=500 (three of them) and
+    k=1000 (all four, the column-pair struct too); the others, and the lone
+    in_set item at k=7 and k=20, get a limit query each."""
+    basic = validate(sample_df, _sample_suite()).results
+    for evr, (vals, _) in zip(basic, _first_k(sample_df, 20)):
+        assert evr.result["partial_unexpected_list"] == vals
+    assert len(basic[3].result["partial_unexpected_list"]) == 2
+    for k in (7, 500, 1000):
+        rf = {"result_format": "COMPLETE", "unexpected_list_limit": k,
+              "unexpected_index_column_names": ["id"]}
+        complete = validate(sample_df, _sample_suite(),
+                            result_format=rf).results
+        for evr, (vals, index) in zip(complete, _first_k(sample_df, k)):
+            assert evr.result["unexpected_list"] == vals
+            assert evr.result["unexpected_index_list"] == index
+        assert [e.result["unexpected_count"] for e in complete[:5]] == \
+            [429, 273, 695, 2, 0]
+        assert complete[4].result["unexpected_list"] == []
+
+
+@pytest.mark.parametrize("k", [20, 1000])
+def test_sample_query_error_lands_in_served_items(sample_df, monkeypatch, k):
+    """A failing sample query becomes the exception_info of each failing
+    map item it served, and of no other item; with catch_exceptions=False
+    it raises. k=20 breaks the per-item limit queries, k=1000 the one query
+    the four items share."""
+    import pyspark.sql.classic.dataframe as CD
+    real = CD.DataFrame.collect
+
+    def broken(self):
+        if "__i" in self.columns:
+            raise RuntimeError("sample query broke")
+        return real(self)
+
+    monkeypatch.setattr(CD.DataFrame, "collect", broken)
+    rf = {"result_format": "COMPLETE", "unexpected_list_limit": k}
+    res = validate(sample_df, _sample_suite(), result_format=rf).results
+    raised = [bool((r.exception_info or {}).get("raised_exception"))
+              for r in res]
+    assert raised == [True, True, True, True, False, False]
+    assert all("sample query broke" in r.exception_info["exception_message"]
+               for r in res[:4])
+    assert res[4].success and res[5].success
+    with pytest.raises(RuntimeError, match="sample query broke"):
+        validate(sample_df, _sample_suite(), result_format=rf,
+                 catch_exceptions=False)

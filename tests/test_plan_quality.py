@@ -10,6 +10,10 @@ from pyspark.sql import functions as F
 from sparkcheck.planner import compile_suite
 from sparkcheck.types import ExpectationConfiguration as EC
 
+# jobs of _contract_suite() on clips_path (4 input files, local[4])
+PER_PARTITION_JOBS = 10
+GLOBAL_JOBS = 9
+
 
 @pytest.fixture(scope="module")
 def clips_path(spark, tmp_path_factory):
@@ -338,3 +342,190 @@ def test_unique_proportion_approx_plans_hll(spark, clips_path):
     assert "approx_count_distinct" not in exact
     assert "approx_count_distinct" in approx
     assert "count(distinct" not in approx.lower()
+
+
+def _job_ids(spark, fn):
+    """Runs ``fn`` in a Spark job group of its own; returns its result and
+    the ids of the jobs it ran (deterministic for a given plan and data)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _count_jobs(spark, fn):
+    out, ids = _job_ids(spark, fn)
+    return out, len(ids)
+
+
+def _contract_suite():
+    from sparkcheck import ExpectationSuite
+    return (ExpectationSuite("contract")
+            .add("expect_column_values_to_not_be_null", column="clip_id",
+                 mostly=0.999)
+            .add("expect_column_values_to_match_regex", column="clip_id",
+                 regex=r"^clip-[0-9]{10}$", mostly=0.99)
+            .add("expect_column_values_to_be_unique", column="clip_id",
+                 mostly=0.99)
+            .add("expect_column_values_to_be_between", column="sr_hz",
+                 min_value=8000, max_value=48000, mostly=0.999)
+            .add("expect_column_values_to_be_in_set", column="codec",
+                 value_set=["wav", "flac", "mp3", "opus"], mostly=0.999)
+            .add("expect_column_value_lengths_to_be_between",
+                 column="transcript", min_value=5, max_value=400)
+            .add("expect_column_mean_to_be_between", column="dur_ms",
+                 min_value=2000, max_value=5000)
+            .add("expect_column_stdev_to_be_between", column="dur_ms",
+                 min_value=100, max_value=5000)
+            .add("expect_column_kl_divergence_to_be_less_than",
+                 column="dur_ms", threshold=1.0, tail_weight_holdout=0.01,
+                 partition_object={
+                     "bins": [200, 1500, 2500, 3500, 5000, 8000, 30000],
+                     "weights": [0.18, 0.26, 0.20, 0.17, 0.12, 0.07]})
+            .add("expect_table_row_count_to_be_between", min_value=1))
+
+
+def test_contract_suite_job_budget(spark, clips_path):
+    """The contract suite's Spark job count is pinned: the fused pass, ONE
+    sample query for its four failing map items, and uniqueness from one
+    persisted dup-key intermediate. Per-partition collected mode: fused 2,
+    samples 2, uniqueness 6."""
+    from sparkcheck import validate
+    df = spark.read.parquet(clips_path)
+    res, pp_jobs = _count_jobs(
+        spark, lambda: validate(df, _contract_suite(), per_partition=True))
+    failing = [r.expectation_config.expectation_type for r in res.results
+               if r.result.get("unexpected_count")]
+    assert len(failing) == 5, failing  # 4 fused map items + unique
+    assert not any((r.exception_info or {}).get("raised_exception")
+                   for r in res.results)
+    assert pp_jobs == PER_PARTITION_JOBS
+    _, global_jobs = _count_jobs(
+        spark, lambda: validate(df, _contract_suite()))
+    assert global_jobs == GLOBAL_JOBS
+
+
+def _spy_sample_plans(monkeypatch) -> list[str]:
+    """Records the executed plan of every sample query (a frame with an
+    ``__i`` column) that collects."""
+    import pyspark.sql.classic.dataframe as CD
+    plans = []
+    real = CD.DataFrame.collect
+
+    def spy(self):
+        rows = real(self)
+        if "__i" in self.columns:
+            plans.append(self._jdf.queryExecution().executedPlan().toString()
+                         .split("== Initial Plan ==")[0])
+        return rows
+
+    monkeypatch.setattr(CD.DataFrame, "collect", spy)
+    return plans
+
+
+def test_sample_pass_is_one_query_for_any_failing_items(spark, clips_path,
+                                                       monkeypatch):
+    """Violation samples for 2 or 4 failing items with at most k unexpected
+    rows each cost the same <= 2 jobs: one shared query whose per-item
+    first-k cut runs as a WindowGroupLimit (partial, below the shuffle). A
+    lone such item keeps its plain limit query, also <= 2 jobs."""
+    from sparkcheck.runner import ValidationRun
+    df = spark.read.parquet(clips_path)
+    plan = compile_suite([
+        EC("expect_column_values_to_not_be_null", {"column": "clip_id"}),
+        EC("expect_column_values_to_match_regex",
+           {"column": "clip_id", "regex": r"^clip-[0-9]{10}$"}),
+        EC("expect_column_values_to_be_between",
+           {"column": "sr_hz", "min_value": 8000, "max_value": 48000}),
+        EC("expect_column_values_to_be_in_set",
+           {"column": "codec", "value_set": ["wav", "flac", "mp3", "opus"]}),
+    ])
+    run = ValidationRun(df)
+    conds = [(it, run._nonnull_of(it) & ~it.spec.condition(it.kwargs))
+             for it in next(iter(plan.domains.values())).fused_items]
+    failing = [(it, cond, df.filter(cond).count()) for it, cond in conds]
+    assert all(0 < n <= run._sample_limit() for _, _, n in failing)
+    plans = _spy_sample_plans(monkeypatch)
+    one, n_one = _count_jobs(spark, lambda: run._sample_pass(df, failing[:1]))
+    two, n_two = _count_jobs(spark, lambda: run._sample_pass(df, failing[:2]))
+    four, n_four = _count_jobs(spark, lambda: run._sample_pass(df, failing))
+    assert n_one <= 2 and n_two == n_four <= 2
+    assert [len(one), len(two), len(four)] == [1, 2, 4]
+    assert all(samples for samples, _ in four.values())
+    assert four[id(failing[0][0])] == one[id(failing[0][0])]
+    assert len(plans) == 3
+    assert "CollectLimit" in plans[0] and "Window" not in plans[0]
+    for txt in plans[1:]:
+        assert "WindowGroupLimit" in txt, txt
+
+
+def test_dense_violations_keep_an_early_stopping_limit(spark, monkeypatch):
+    """An item with more than k unexpected rows gets a limit query of its
+    own, which stops after the first input partition when that partition
+    holds k of them: one job of one task, no window. The two items with at
+    most k rows (one violation, in the last partition) share the windowed
+    query. Samples equal df.filter(cond).limit(k) either way."""
+    from sparkcheck.runner import ValidationRun
+    df = spark.range(0, 4000, numPartitions=4).select(
+        "id", (F.col("id") % 3).alias("a"),
+        F.when(F.col("id") == 3999, -1).otherwise(1).alias("b"))
+    plan = compile_suite([
+        EC("expect_column_values_to_be_between",
+           {"column": "a", "min_value": 0, "max_value": 0}),
+        EC("expect_column_values_to_be_in_set",
+           {"column": "id", "value_set": list(range(10))}),
+        EC("expect_column_values_to_be_between",
+           {"column": "b", "min_value": 0, "max_value": 1}),
+        EC("expect_column_values_to_be_in_set",
+           {"column": "b", "value_set": [1]}),
+    ])
+    run = ValidationRun(df)
+    items = next(iter(plan.domains.values())).fused_items
+    conds = [run._nonnull_of(it) & ~it.spec.condition(it.kwargs)
+             for it in items]
+    failing = [(it, c, df.filter(c).count()) for it, c in zip(items, conds)]
+    assert [n for _, _, n in failing] == [2666, 3990, 1, 1]
+    plans = _spy_sample_plans(monkeypatch)
+    out, ids = _job_ids(spark, lambda: run._sample_pass(df, failing))
+    st = spark.sparkContext.statusTracker()
+    tasks = [sum(st.getStageInfo(s).numTasks for s in st.getJobInfo(j).stageIds)
+             for j in ids]
+    assert tasks[:2] == [1, 1]   # the two dense items: first partition only
+    assert len(ids) <= 4
+    assert ["Window" in p for p in plans] == [False, False, True]
+    assert all("CollectLimit" in p for p in plans[:2])
+    for (it, c, _), key in zip(failing, ["a", "id", "b", "b"]):
+        want = [r[key] for r in df.filter(c).limit(20).collect()]
+        assert out[id(it)] == (want, None)
+
+
+def test_global_uniqueness_plans_no_window(spark, clips_path, monkeypatch):
+    """Globally, the dup-key intermediate is a hash aggregate and a filter:
+    a key is one row there, so a window over it would only sort. Per
+    partition the window sums each key's partition counts."""
+    import pyspark.sql.classic.dataframe as CD
+
+    from sparkcheck import ExpectationSuite, validate
+    plans = []
+    real = CD.DataFrame.persist
+
+    def spy(self, *a, **kw):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(CD.DataFrame, "persist", spy)
+    df = spark.read.parquet(clips_path)
+    suite = ExpectationSuite("u").add("expect_column_values_to_be_unique",
+                                      column="clip_id")
+    glob = validate(df, suite).results[0]
+    part = validate(df, suite, per_partition=True).results[0]
+    assert glob.result["unexpected_count"] == part.result["unexpected_count"] > 0
+    assert len(plans) == 2
+    assert "Window" not in plans[0] and "Aggregate" in plans[0]
+    assert "Window" in plans[1]

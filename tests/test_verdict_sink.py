@@ -472,3 +472,103 @@ def test_mostly_col_matches_mostly_success(spark, cases):
     for i, (nn, ux, mostly) in enumerate(cases):
         assert row[f"c{i}"] == mostly_success(nn, nn, ux, mostly), \
             (nn, ux, mostly)
+
+
+@pytest.mark.filterwarnings("ignore:increasing/decreasing")
+def test_null_partition_value_gets_its_own_verdict(spark, tmp_path):
+    """A null partition_col value is a partition: 10 rows 'a', 3 rows
+    NULL, 5 rows 'b' (every x of 'b' null). The rollup's global row is told
+    apart from the NULL partition by grouping(), so the NULL partition has
+    its own verdict for every map-shaped kind (fused, unique, z-score,
+    window) and the partition counts sum to the global ones, collected and
+    sink alike."""
+    from pyspark.sql import functions as F
+    df = spark.range(18, numPartitions=3).select(
+        F.col("id"),
+        F.when(F.col("id") < 10, "a").when(F.col("id") < 13, None)
+        .otherwise("b").alias("part"),
+        F.when(F.col("id") >= 13, None).otherwise(F.col("id")).alias("x"),
+        (F.col("id") % 9).alias("u"),
+        F.col("id").cast("double").alias("y"))
+    suite = (ExpectationSuite("nullpart")
+             .add("expect_column_values_to_not_be_null", column="x")
+             .add("expect_column_values_to_be_unique", column="u")
+             .add("expect_column_value_z_scores_to_be_less_than",
+                  column="y", threshold=1.0)
+             .add("expect_column_values_to_be_increasing", column="y"))
+    # not_null: 'b' holds the 5 nulls; unique: every u occurs twice;
+    # z-score: |id - 8.5| > stddev 5.34 for ids 0-3 and 14-17
+    want = {("a", "expect_column_values_to_not_be_null"): (10, 0),
+            (None, "expect_column_values_to_not_be_null"): (3, 0),
+            ("b", "expect_column_values_to_not_be_null"): (5, 5),
+            ("a", "expect_column_values_to_be_unique"): (10, 10),
+            (None, "expect_column_values_to_be_unique"): (3, 3),
+            ("b", "expect_column_values_to_be_unique"): (5, 5),
+            ("a", "expect_column_value_z_scores_to_be_less_than"): (10, 4),
+            (None, "expect_column_value_z_scores_to_be_less_than"): (3, 0),
+            ("b", "expect_column_value_z_scores_to_be_less_than"): (5, 4),
+            ("a", "expect_column_values_to_be_increasing"): (10, 0),
+            (None, "expect_column_values_to_be_increasing"): (3, 0),
+            ("b", "expect_column_values_to_be_increasing"): (5, 0)}
+    collected = validate(df, suite, per_partition=True, partition_col="part")
+    sink_dir = str(tmp_path / "sink")
+    sunk = validate(df, suite, per_partition=True, partition_col="part",
+                    partition_verdict_sink=sink_dir)
+    for res in (collected, sunk):
+        assert [(r.result["element_count"], r.result["unexpected_count"])
+                for r in res.results] == [(18, 5), (18, 18), (18, 8), (18, 0)]
+    assert {(v["partition_id"], v["expectation_type"]):
+            (v["element_count"], v["unexpected_count"])
+            for v in collected.meta["partition_verdicts"]} == want
+    assert {(r["partition_id"], r["expectation_type"]):
+            (r["element_count"], r["unexpected_count"])
+            for r in read_partition_verdicts(spark, sink_dir).collect()} == want
+
+
+def test_unique_counts_samples_and_shares_in_every_mode(spark, tmp_path):
+    """Exact uniqueness reads its dup totals, top-k samples and per-partition
+    shares from one dup-key intermediate; global, collected and sink modes
+    agree with the closed forms. Single column: v = id % 500 below id 1000
+    (500 values twice each, the two rows in different buckets), unique
+    above. Compound (a, b) with partially-null keys, which group null-safely
+    (all_values_are_missing drops only the all-null rows)."""
+    from pyspark.sql import functions as F
+    single = spark.range(0, 1200, numPartitions=4).select(
+        (F.col("id") % 3).cast("string").alias("bucket"),
+        F.when(F.col("id") < 1000, F.col("id") % 500)
+        .otherwise(F.col("id")).alias("v"))
+    compound = spark.createDataFrame(
+        [("x", 1, None), ("y", 1, None),
+         ("x", None, 2), ("x", None, 2), ("y", None, 2),
+         ("x", None, None), ("y", None, None),
+         ("x", 3, 4), ("y", 3, 5),
+         ("y", 6, 6), ("y", 6, 6)], "bucket string, a int, b int")
+    cases = [
+        (single, "expect_column_values_to_be_unique", {"column": "v"},
+         1000, 500, [v for v in range(10) for _ in range(2)],
+         {"0": 334, "1": 333, "2": 333}),
+        (compound, "expect_compound_columns_to_be_unique",
+         {"column_list": ["a", "b"]}, 7, 3,
+         [{"a": None, "b": 2}] * 3 + [{"a": 1, "b": None}] * 2
+         + [{"a": 6, "b": 6}] * 2,
+         {"x": 3, "y": 4}),
+    ]
+    for df, etype, kw, dup_rows, groups, samples, shares in cases:
+        suite = ExpectationSuite("u").add(etype, **kw)
+        sink_dir = str(tmp_path / etype)
+        runs = {
+            "global": validate(df, suite),
+            "collected": validate(df, suite, per_partition=True,
+                                  partition_col="bucket"),
+            "sink": validate(df, suite, per_partition=True,
+                             partition_col="bucket",
+                             partition_verdict_sink=sink_dir)}
+        for mode, res in runs.items():
+            r = res.results[0].result
+            assert (r["unexpected_count"], r["details"]["duplicate_groups"],
+                    r["partial_unexpected_list"]) == \
+                (dup_rows, groups, samples), (etype, mode)
+        assert {v["partition_id"]: v["unexpected_count"] for v in
+                runs["collected"].meta["partition_verdicts"]} == shares
+        assert {r["partition_id"]: r["unexpected_count"] for r in
+                read_partition_verdicts(spark, sink_dir).collect()} == shares
